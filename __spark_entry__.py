@@ -1746,6 +1746,8 @@ def _q_ivf_topk_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     via PARTITION PRUNING at the scan (no per-row assignment at query
     time).  Values must equal the in-memory IVF path — same oracle as
     sim_ivf_topk."""
+    import atexit
+    import shutil
     import tempfile
 
     emb = _embeddings(spark, sf_dir)
@@ -1757,10 +1759,12 @@ def _q_ivf_topk_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     # one written layout per (session, sf_dir) — repeated gate invocations
     # (plan pass + value pass, pytest replays) reuse it instead of leaking
-    # a fresh mkdtemp parquet corpus each time (same policy as _ENGINES)
+    # a fresh mkdtemp parquet corpus each time (same policy as _ENGINES);
+    # the layout is removed when the interpreter exits
     key = (_skey(spark), sf_dir, "ivfpart")
     if key not in _IVF_PART_DIRS:
         root = tempfile.mkdtemp(prefix="ssx_ivfpart_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
         similarity.write_ivf_partitioned(
             emb.where(F.col("vec_id") != 0), root + "/corpus", centroids
         )
@@ -2422,9 +2426,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # registry order.  Gates past the window still have a round-3/4 driver
 # verdict, a same-session judge replay, and pytest coverage, and every key
 # is always returned — pytest and tools/check_entry.py run the FULL
-# registry regardless of order.  The legacy recency rotation remains
-# available ONLY as an explicit harness-owner opt-in
-# ($SPARK_GRAFT_DRIVER_ROTATION=1); it is never inferred.
+# registry regardless of order.
 _DRIVER_WINDOW_R5: tuple[str, ...] = (
     # (1) no driver verdict since round 2
     "rel_events_window",
@@ -2488,50 +2490,11 @@ def _fixed_driver_order(q: dict[str, Callable]) -> dict[str, Callable]:
     untouched; keys not in the window follow in registry order).  A window
     name missing from the registry is a hard error — the list must never
     drift from the gates it claims to front-load."""
-    import os
-
-    if os.environ.get("SPARK_GRAFT_DRIVER_ROTATION", "") == "1":
-        return _rotate_for_driver(q)
     missing = [k for k in _DRIVER_WINDOW_R5 if k not in q]
     if missing:
         raise KeyError(f"driver window names not in registry: {missing}")
     rest = [k for k in q if k not in set(_DRIVER_WINDOW_R5)]
     return {k: q[k] for k in (*_DRIVER_WINDOW_R5, *rest)}
-
-
-def _driver_verified_rounds() -> dict[str, int]:
-    """gate key -> highest round with a committed driver verdict (artifacts
-    only record gates the driver actually ran; err rows still count as
-    'ran' — the rotation optimizes for coverage recency, not pass state)."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                keys = json.load(f).keys()
-        except (OSError, ValueError):
-            continue
-        for key in keys:
-            last[key] = max(last.get(key, -1), rnd)
-    return last
-
-
-def _rotate_for_driver(q: dict[str, Callable]) -> dict[str, Callable]:
-    """Reorder the registry least-recently-driver-verified first (stable on
-    ties) so the driver's prefix always hits the stalest gates.  Contents
-    are untouched — ordering only."""
-    last = _driver_verified_rounds()
-    order = sorted(q, key=lambda k: last.get(k, -1))  # stable: ties keep
-    return {k: q[k] for k in order}                   # registry order
 
 
 def oracle_sql() -> dict[str, str]:

@@ -557,8 +557,8 @@ def run_scaling() -> dict:
     # stats, fit f = (4*t_hi - t_lo)/3 on pair stage walls).  At 480k the
     # post-rework build's hi leg fell to ~20s and the fixed fraction alone
     # capped a perfectly clean solo window at ~0.78; at 960k a clean window
-    # measured solo 0.817 / density-matched 0.95 in one pair (PLANS.md §15,
-    # scale_960k_pair3.json).  Per-doc cost is flat 480k->960k at both
+    # measured solo 0.817 / density-matched 0.95 in one pair (PLANS.md
+    # §15).  Per-doc cost is flat 480k->960k at both
     # cluster sizes, so the bigger legs change the overhead fraction, not
     # the work.
     n_scale = int(os.environ.get("SPARK_GRAFT_SCALE_DOCS", "960000"))

@@ -1,12 +1,27 @@
 """SearchEngine — the user-facing facade (the ``Strucmotif`` entry point
 analogue, strucmotif-search-core Strucmotif.java:27-37).
 
-Wraps a published IndexStore generation and exposes:
-- ``search(query, k, mode)``      — BM25 top-k via the DAAT path, hits joined
-                                    to document metadata (late
-                                    materialization);
-- ``search_naive(query, k, mode)``— the Catalyst-only baseline plan;
-- exact stats accessors (df/cf/avgdl) for tests and planning.
+Wraps a published IndexStore generation.  Every ranked query takes the same
+path, the reference's facade → plan → candidate intersection → score →
+top-k:
+
+1. **prepare** (``_prepare``): analyze the query with the generation's
+   analyzer, then plan it (``plan``) through the driver-side vocabulary
+   cache — rarest-first scoring groups, idfs, the empty-result early exits;
+2. **kernel**: the plan's scorer — the sharded DAAT kernel
+   (``search``, ``bool_search`` and the prefix/fuzzy/regex rewrites, which
+   turn multi-term tokens into expansion groups and then call ``search``),
+   the Dirichlet kernel (``ql_search``), the field kernels
+   (``fielded_search``, ``search_qualified``), one-pass batch scoring
+   (``msearch``), or the Catalyst-only baseline (``search_naive``,
+   ``search_min_match``);
+3. **materialize** (``_materialize``): one broadcast join of the ≤k winners
+   to document metadata (late materialization).
+
+``hybrid_search``, ``snippet_search`` and ``search_with_timeout`` wrap
+``search``; ``count_matches``/``delete_by_query`` prepare through the same
+step (query/analytics.py).  Positional queries (``phrase_search``,
+``near_search``) analyze the same way but match on positions, not plans.
 """
 
 from __future__ import annotations
@@ -14,13 +29,30 @@ from __future__ import annotations
 import json
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build.index_store import IndexStore
+from .oracle import tokenize
 from .query.bm25 import bm25_topk_naive
 from .query.daat import bm25_topk_daat
 from .query.planner import QueryPlan, plan_query
+from .tokenizer import analyze_text
+
+# doc_map columns the late-materialization join attaches to each hit
+_META_COLS = ("repo", "path", "commit", "lang")
+
+
+def _multi_term_stem(raw: str, marker: str, kind: str) -> str | None:
+    """The stem of a ``marker``-suffixed multi-term query token (None for a
+    plain token); the stem must be one frozen-tokenizer term."""
+    if not (raw.endswith(marker) and len(raw) > 1):
+        return None
+    stem = raw[:-1]
+    toks = tokenize(stem)
+    if len(toks) != 1 or toks[0] != stem:
+        raise ValueError(f"invalid {kind} {raw!r}")
+    return stem
 
 
 def collect_with_timeout(spark: SparkSession, df: DataFrame, timeout_s: float):
@@ -140,12 +172,48 @@ class SearchEngine:
     ) -> QueryPlan:
         return plan_query(
             query,
-            self.terms,
-            self.stats,
             stats_row=self._stats_row,
-            expansions=expansions,
             vocab_lookup=self._vocab_lookup,
+            expansions=expansions,
             should=should,
+        )
+
+    def _prepare(
+        self,
+        query: str,
+        expansions: dict[str, list[str]] | None = None,
+        should: str = "",
+    ) -> QueryPlan:
+        """Step one of every ranked query: analyze ``query`` (and the SHOULD
+        clause) with the generation's analyzer — a code-analyzed index
+        answers 'getFoo' as get+foo — then plan through the vocabulary
+        cache."""
+        return self.plan(
+            analyze_text(query, self.analyzer),
+            expansions=expansions,
+            should=analyze_text(should, self.analyzer) if should else "",
+        )
+
+    def _join_meta(
+        self, hits: DataFrame, cols: tuple[str, ...] = _META_COLS
+    ) -> DataFrame:
+        """The late-materialization join (J4 analogue,
+        DefaultStrucmotifRuntime.java:145-153): metadata only for the <=k
+        winners; the tiny hit side is broadcast so the doc dictionary is
+        never shuffled."""
+        return F.broadcast(hits).join(
+            self.doc_map.select("doc_id", *cols), on="doc_id"
+        )
+
+    def _materialize(
+        self, hits: DataFrame, k: int, score: str = "score"
+    ) -> DataFrame:
+        """Last step of every ranked query: the metadata join, in the
+        engine's total order (``score`` desc, doc_id asc), top ``k``."""
+        return (
+            self._join_meta(hits)
+            .orderBy(F.desc(score), F.asc("doc_id"))
+            .limit(k)
         )
 
     # ---- search ----------------------------------------------------------
@@ -216,28 +284,45 @@ class SearchEngine:
         expansions form one scoring group whose posting lists are unioned
         (tf sums, df = max member df — Lucene SynonymQuery convention).
         """
-        from .oracle import tokenize
-        from .tokenizer import analyze_text
+        _plan, hits = self._search(
+            query, k, mode, doc_predicate, prune_shards, expansions, exclude,
+            should, offset, after,
+        )
+        return self._materialize(hits, k) if with_meta else hits
 
-        query = analyze_text(query, self.analyzer)
-        if exclude:
-            exclude = analyze_text(exclude, self.analyzer)
-        if should is not None:
-            should = analyze_text(should, self.analyzer)
-            if not tokenize(should):
-                # a no-op SHOULD clause ('' or pure punctuation) must not
-                # flip the query into bool mode — with zero SHOULD groups
-                # every group would become MUST and an OR query silently
-                # turns into a full conjunction
-                should = None
-        plan = self.plan(query, expansions=expansions, should=should or "")
+    def _search(
+        self,
+        query: str,
+        k: int,
+        mode: str,
+        doc_predicate=None,
+        prune_shards: bool | None = None,
+        expansions: dict[str, list[str]] | None = None,
+        exclude: str | None = None,
+        should: str | None = None,
+        offset: int = 0,
+        after: tuple[float, int] | None = None,
+    ) -> tuple[QueryPlan, DataFrame]:
+        """``search`` up to (not including) materialization: the prepared
+        plan and its DAAT hits."""
+        if offset and after is not None:
+            raise ValueError("offset and after are mutually exclusive")
+        if should is not None and not tokenize(
+            analyze_text(should, self.analyzer)
+        ):
+            # a no-op SHOULD clause ('' or pure punctuation) must not flip
+            # the query into bool mode — with zero SHOULD groups every
+            # group would become MUST and an OR query silently turns into a
+            # full conjunction
+            should = None
+        plan = self._prepare(query, expansions=expansions, should=should or "")
         if should is not None:
             mode = "bool"
         exclude_ids: list[int] = []
         if exclude:
-            from .oracle import tokenize
-
-            found = self._vocab_lookup(sorted(set(tokenize(exclude))))
+            found = self._vocab_lookup(
+                sorted(set(tokenize(analyze_text(exclude, self.analyzer))))
+            )
             exclude_ids = sorted(tid for tid, _df in found.values())
         norms = self.norms
         if doc_predicate is not None:
@@ -256,22 +341,6 @@ class SearchEngine:
                     _, evicted = self._pred_norms.popitem(last=False)
                     evicted.unpersist()
             norms = self._pred_norms[key]
-        n_shards = self.meta.get("n_shards") or 0
-        if prune_shards is None:
-            # Pruning adds TWO scheduler round-trips (metadata phase-0 +
-            # probe phase-1) before the scoring job; it pays only when the
-            # decode work it can skip exceeds that fixed cost.  Decode work
-            # is proportional to the query's candidate posting volume =
-            # sum of group dfs (exact, from the plan), so prune only when
-            # the volume is large AND there are enough shards to skip.
-            # Measured: at 120k docs a head-term query is 3x FASTER
-            # single-pass (0.42s vs 1.17s); at 10^12 docs any head term
-            # clears the threshold by orders of magnitude and pruning is
-            # the only viable plan.
-            volume = sum(g.df for g in plan.groups)
-            prune_shards = n_shards > 64 and volume > 2_000_000
-        if offset and after is not None:
-            raise ValueError("offset and after are mutually exclusive")
         hits = bm25_topk_daat(
             self.spark,
             self.postings,
@@ -286,7 +355,59 @@ class SearchEngine:
         )
         if offset:
             hits = hits.offset(offset)
-        return self._materialize(hits, k) if with_meta else hits
+        return plan, hits
+
+    def _rewrite(
+        self,
+        tokens: list[str | tuple[str, str | None, Column]],
+        max_expansions: int,
+    ) -> tuple[list[str], dict[str, list[str]], bool]:
+        """The multi-term rewrite shared by prefix/fuzzy/regex search
+        (Lucene MultiTermQuery → blended SynonymQuery, riding the A4
+        expansion machinery: plan_query groups / DAAT group_tf union).
+
+        ``tokens`` is the query: plain terms (``str``) and multi-term tokens
+        ``(label, stand_in, pred)``.  A multi-term token probes the
+        dictionary-sized terms table with the pushed-down predicate
+        ``pred`` and becomes ONE expansion group of every matching term
+        (tf = sum of member tfs, df = max member df).  More than
+        ``max_expansions`` matches raises — a one-character prefix over a
+        web-scale vocabulary is a query-cost bomb the engine refuses rather
+        than silently truncates (Lucene's maxExpansions guard); ``label``
+        names the token in that error.  A token matching nothing is an
+        absent group: ``stand_in`` (a term provably outside the vocabulary)
+        takes its place, or it is dropped when ``stand_in`` is None.
+        Returns (plain tokens, expansions, whether any token matched
+        nothing)."""
+        base: list[str] = []
+        expansions: dict[str, list[str]] = {}
+        unmatched = False
+        for tok in tokens:
+            if isinstance(tok, str):
+                base.append(tok)
+                continue
+            label, stand_in, pred = tok
+            rows = (
+                self.terms.where(pred)
+                .select("term")
+                .orderBy("term")
+                .limit(max_expansions + 1)
+                .collect()
+            )
+            members = [r["term"] for r in rows]
+            if len(members) > max_expansions:
+                raise ValueError(
+                    f"{label} more than {max_expansions} terms"
+                )
+            if not members:
+                unmatched = True
+                if stand_in is not None:
+                    base.append(stand_in)
+                continue
+            base.append(members[0])
+            if members[1:]:
+                expansions.setdefault(members[0], []).extend(members[1:])
+        return base, expansions, unmatched
 
     def prefix_search(
         self,
@@ -298,54 +419,24 @@ class SearchEngine:
     ) -> DataFrame:
         """Trailing-wildcard query: each token ending in ``*`` expands to ALL
         vocabulary terms sharing its prefix, scored as ONE expansion group
-        (tf = sum of member tfs, df = max member df) — the Lucene
-        PrefixQuery → blended SynonymQuery rewrite, reusing the A4 expansion
-        machinery (plan_query groups / DAAT group_tf union).
-
-        The vocabulary probe is a pushed-down ``StartsWith`` range scan of
-        the terms table (dictionary-sized, driver-cached thereafter via the
-        vocab cache for exact terms; the prefix row set itself is ≤
-        ``max_expansions`` rows).  More than ``max_expansions`` matching
-        terms raises — a one-character prefix over a web-scale vocabulary
-        is a query-cost bomb the engine refuses rather than silently
-        truncates (Lucene's maxExpansions guard).  A wildcard with NO
-        matching vocabulary term contributes an absent group: ignored under
-        OR, empties the result under AND.  A plain token that also appears
-        as a member of a wildcard group merges into that group (documented
-        planner dedup semantics).
+        (``_rewrite``).  The vocabulary probe is a pushed-down
+        ``StartsWith`` range scan of the terms table; the prefix row set is
+        ≤ ``max_expansions`` rows.  A wildcard with NO matching vocabulary
+        term contributes an absent group: ignored under OR, empties the
+        result under AND.  A plain token that also appears as a member of a
+        wildcard group merges into that group (documented planner dedup
+        semantics).
         """
-        from .oracle import tokenize
-
-        base_tokens: list[str] = []
-        expansions: dict[str, list[str]] = {}
+        tokens: list = []
         for raw in query.split():
-            if not (raw.endswith("*") and len(raw) > 1):
-                base_tokens.append(raw)
-                continue
-            prefix = raw[:-1]
-            toks = tokenize(prefix)
-            if len(toks) != 1 or toks[0] != prefix:
-                raise ValueError(f"invalid wildcard prefix {raw!r}")
-            rows = (
-                self.terms.where(F.col("term").startswith(prefix))
-                .select("term")
-                .orderBy("term")
-                .limit(max_expansions + 1)
-                .collect()
-            )
-            members = [r["term"] for r in rows]
-            if len(members) > max_expansions:
-                raise ValueError(
-                    f"{raw!r} expands to more than {max_expansions} terms"
-                )
-            if not members:
-                base_tokens.append(prefix)  # absent group
-                continue
-            base_tokens.append(members[0])
-            if members[1:]:
-                expansions.setdefault(members[0], []).extend(members[1:])
+            prefix = _multi_term_stem(raw, "*", "wildcard prefix")
+            tokens.append(raw if prefix is None else (
+                f"{raw!r} expands to", prefix,
+                F.col("term").startswith(prefix),
+            ))
+        base, expansions, _ = self._rewrite(tokens, max_expansions)
         return self.search(
-            " ".join(base_tokens), k=k, mode=mode,
+            " ".join(base), k=k, mode=mode,
             expansions=expansions or None, **kw,
         )
 
@@ -360,9 +451,7 @@ class SearchEngine:
     ) -> DataFrame:
         """Fuzzy query: each token ending in ``~`` expands to ALL vocabulary
         terms within Levenshtein distance ``max_dist`` of it, scored as ONE
-        expansion group (tf = sum of member tfs, df = max member df) — the
-        Lucene FuzzyQuery → blended SynonymQuery rewrite, reusing the A4
-        expansion machinery (the reference's tolerance expansion,
+        expansion group (``_rewrite``; the reference's tolerance expansion,
         ResiduePairOccurrence.java:166-227, where one query term admits a
         neighborhood of compatible index terms).
 
@@ -370,54 +459,26 @@ class SearchEngine:
         ``length(term) BETWEEN len±d`` range pre-filter (parquet min/max
         pruning on the dictionary-sized terms table) followed by the
         built-in ``levenshtein`` expression — no Python UDF, no collect of
-        the vocabulary.  More than ``max_expansions`` matches raises (the
-        Lucene maxExpansions guard): a 1-character fuzzy token over a
-        web-scale vocabulary is a query-cost bomb the engine refuses rather
-        than silently truncates.  A fuzzy token with NO vocabulary match
-        within distance contributes an absent group (ignored under OR,
-        empties the result under AND).
+        the vocabulary.  More than ``max_expansions`` matches raises.  A
+        fuzzy token with NO vocabulary match within distance contributes an
+        absent group (ignored under OR, empties the result under AND).
         """
-        from .oracle import tokenize
-
-        base_tokens: list[str] = []
-        expansions: dict[str, list[str]] = {}
+        tokens: list = []
         for raw in query.split():
-            if not (raw.endswith("~") and len(raw) > 1):
-                base_tokens.append(raw)
+            base = _multi_term_stem(raw, "~", "fuzzy token")
+            if base is None:
+                tokens.append(raw)
                 continue
-            base = raw[:-1]
-            toks = tokenize(base)
-            if len(toks) != 1 or toks[0] != base:
-                raise ValueError(f"invalid fuzzy token {raw!r}")
-            rows = (
-                self.terms.where(
-                    F.length("term").between(
-                        len(base) - max_dist, len(base) + max_dist
-                    )
-                )
+            pred = F.length("term").between(
+                len(base) - max_dist, len(base) + max_dist
+            ) & (
                 # bounded DP: the 3-arg levenshtein early-exits rows whose
                 # distance exceeds the threshold (returns -1 for those)
-                .where(
-                    F.levenshtein(
-                        F.col("term"), F.lit(base), max_dist
-                    ).between(0, max_dist)
-                )
-                .select("term")
-                .orderBy("term")
-                .limit(max_expansions + 1)
-                .collect()
+                F.levenshtein(F.col("term"), F.lit(base), max_dist)
+                .between(0, max_dist)
             )
-            members = [r["term"] for r in rows]
-            if len(members) > max_expansions:
-                raise ValueError(
-                    f"{raw!r} expands to more than {max_expansions} terms"
-                )
-            if not members:
-                base_tokens.append(base)  # absent group
-                continue
-            base_tokens.append(members[0])
-            if members[1:]:
-                expansions.setdefault(members[0], []).extend(members[1:])
+            tokens.append((f"{raw!r} expands to", base, pred))
+        base_tokens, expansions, _ = self._rewrite(tokens, max_expansions)
         return self.search(
             " ".join(base_tokens), k=k, mode=mode,
             expansions=expansions or None, **kw,
@@ -434,44 +495,30 @@ class SearchEngine:
     ) -> DataFrame:
         """Regex term query (Lucene RegexpQuery): every vocabulary term
         fully matching ``pattern`` forms ONE blended expansion group
-        (tf = sum of member tfs, df = max member df), optionally combined
-        with plain ``extra_terms`` — the third member of the
-        prefix/fuzzy/regex multi-term rewrite family, all riding the A4
-        expansion machinery.
+        (``_rewrite``), optionally combined with plain ``extra_terms``.
 
         The vocabulary probe is a JVM ``rlike`` scan of the
         dictionary-sized terms table with the match anchored to the full
         term (``^pattern$``) — dictionary-bounded at any corpus scale.
         Keep patterns within the portable subset (char classes,
         alternation, quantifiers) if results must replay identically
-        across regex engines.  ``max_expansions`` raises on blowup (the
-        Lucene guard); a pattern matching nothing contributes an absent
-        group (ignored under OR, empties the result under AND).
+        across regex engines.  ``max_expansions`` raises on blowup; a
+        pattern matching nothing contributes an absent group (ignored under
+        OR, empties the result under AND).
         """
-        rows = (
-            self.terms.where(F.col("term").rlike(f"^(?:{pattern})$"))
-            .select("term")
-            .orderBy("term")
-            .limit(max_expansions + 1)
-            .collect()
+        base, expansions, unmatched = self._rewrite(
+            [*extra_terms.split(), (
+                f"{pattern!r} matches", None,
+                F.col("term").rlike(f"^(?:{pattern})$"),
+            )],
+            max_expansions,
         )
-        members = [r["term"] for r in rows]
-        if len(members) > max_expansions:
-            raise ValueError(
-                f"{pattern!r} matches more than {max_expansions} terms"
-            )
-        base_tokens = list(extra_terms.split())
-        expansions: dict[str, list[str]] = {}
-        if members:
-            base_tokens.append(members[0])
-            if members[1:]:
-                expansions[members[0]] = members[1:]
-        elif mode == "and" or not base_tokens:
+        if unmatched and (mode == "and" or not base):
             # absent group: empties the conjunction; with no other terms
             # the disjunction is empty too
             return self.spark.createDataFrame([], "doc_id long, score double")
         return self.search(
-            " ".join(base_tokens), k=k, mode=mode,
+            " ".join(base), k=k, mode=mode,
             expansions=expansions or None, **kw,
         )
 
@@ -489,20 +536,15 @@ class SearchEngine:
         (vocabulary gate, same as the BM25 planner).  Rides the identical
         pushed-down posting scan + bucketed-norms cogroup as BM25 — no new
         index artifact, no extra shuffle."""
-        from .oracle import tokenize
         from .query.ql import QL_MU, ql_topk
-        from .tokenizer import analyze_text
 
-        query = analyze_text(query, self.analyzer)
-        distinct = sorted(set(tokenize(query)))
-        found = self._vocab_lookup(distinct)
-        present = sorted(found)  # drop absent terms
+        plan = self._prepare(query)  # plan.terms: present terms only
         term_cfs: list[tuple[int, int]] = []
-        if present:
+        if plan.terms:
             # cf is not in the vocab cache (planner only needs df) — one
             # tiny pushed-down terms scan per query's novel terms
             rows = (
-                self.terms.where(F.col("term").isin(present))
+                self.terms.where(F.col("term").isin(sorted(plan.terms)))
                 .select("term_id", "cf")
                 .collect()
             )
@@ -536,23 +578,13 @@ class SearchEngine:
         most_fields convention.  A term absent from the content vocabulary
         still matches through the field, and vice versa; AND mode requires
         every query term in at least one of the two fields."""
-        from .oracle import tokenize
-        from .query.fielded import field_postings, field_stats, fielded_topk
-        from .tokenizer import analyze_text
+        from .query.fielded import fielded_topk
 
-        query = analyze_text(query, self.analyzer)
-        toks = sorted(set(tokenize(query)))
-        if field not in self._field_cache:
-            fp = field_postings(self.doc_map, field, self.analyzer).persist()
-            fp.count()
-            self._field_cache[field] = (
-                fp, field_stats(self.doc_map, field, self.analyzer)
-            )
-        fp, (fn_docs, avg_fl) = self._field_cache[field]
-        plan = self.plan(query)
+        toks = sorted(set(tokenize(analyze_text(query, self.analyzer))))
+        fp, fn_docs, avg_fl = self._field_side(field)
+        plan = self._prepare(query)
         # singleton groups: key == the term's term_id (planner.TermGroup)
-        found = self._vocab_lookup(toks)
-        term_of_key = {tid: t for t, (tid, _df) in found.items()}
+        term_of_key = dict(zip(plan.term_ids, plan.terms))
         hits = fielded_topk(
             self.spark,
             self.postings,
@@ -569,6 +601,20 @@ class SearchEngine:
             w_field=w_field,
         )
         return self._materialize(hits, k) if with_meta else hits
+
+    def _field_side(self, field: str) -> tuple[DataFrame, int, float]:
+        """A doc_map string field's derived postings with its (n_docs,
+        avg field length), persisted once per field (``_field_cache``)."""
+        if field not in self._field_cache:
+            from .query.fielded import field_postings, field_stats
+
+            fp = field_postings(self.doc_map, field, self.analyzer).persist()
+            fp.count()
+            self._field_cache[field] = (
+                fp, field_stats(self.doc_map, field, self.analyzer)
+            )
+        fp, (n_docs, avg_len) = self._field_cache[field]
+        return fp, n_docs, avg_len
 
     def hybrid_search(
         self,
@@ -626,19 +672,7 @@ class SearchEngine:
             raise ValueError(f"unknown ann backend {ann!r}")
         dense = dense.withColumnRenamed(id_col, "doc_id")
         hits = rrf_fuse(lex, dense, k=k, k0=k0)
-        if not with_meta:
-            return hits
-        return (
-            F.broadcast(hits)
-            .join(
-                self.doc_map.select(
-                    "doc_id", "repo", "path", "commit", "lang"
-                ),
-                on="doc_id",
-            )
-            .orderBy(F.desc("rrf"), F.asc("doc_id"))
-            .limit(k)
-        )
+        return self._materialize(hits, k, score="rrf") if with_meta else hits
 
     def bool_search(
         self,
@@ -669,24 +703,17 @@ class SearchEngine:
         AND requires every clause matched in its own field.  Qualified terms
         run through the generation's analyzer AFTER parsing (a camelCase
         qualified term can fan out to several clauses in that field)."""
-        from .oracle import tokenize
-        from .query.fielded import (
-            field_postings,
-            field_stats,
-            parse_qualified,
-            qualified_topk,
-        )
-        from .tokenizer import analyze_text
+        from .query.fielded import parse_qualified, qualified_topk
 
         clauses: list[tuple[str | None, str]] = []
         for f, t in parse_qualified(query):
             for tok in tokenize(analyze_text(t, self.analyzer)):
                 clauses.append((f, tok))
         clauses = sorted(set(clauses), key=lambda c: (c[0] or "", c[1]))
-        content_terms = sorted({t for f, t in clauses if f is None})
-        plan = self.plan(" ".join(content_terms))
-        found = self._vocab_lookup(content_terms)
-        term_of_key = {tid: t for t, (tid, _df) in found.items()}
+        # content clauses are analyzed already; re-analysis is a no-op
+        content = sorted({t for f, t in clauses if f is None})
+        plan = self._prepare(" ".join(content))
+        term_of_key = dict(zip(plan.term_ids, plan.terms))
         field_sides = {}
         for fname in sorted({f for f, _t in clauses if f is not None}):
             if fname not in self.doc_map.columns:
@@ -694,16 +721,7 @@ class SearchEngine:
                     f"unknown query field {fname!r}; doc_map fields: "
                     f"{[c for c in self.doc_map.columns]}"
                 )
-            if fname not in self._field_cache:
-                fp = field_postings(
-                    self.doc_map, fname, self.analyzer
-                ).persist()
-                fp.count()
-                self._field_cache[fname] = (
-                    fp, field_stats(self.doc_map, fname, self.analyzer)
-                )
-            fp, (fn_docs, avg_fl) = self._field_cache[fname]
-            field_sides[fname] = (fp, fn_docs, avg_fl)
+            field_sides[fname] = self._field_side(fname)
         hits = qualified_topk(
             self.spark,
             self.postings,
@@ -730,26 +748,15 @@ class SearchEngine:
         a window.  Each query's slice is bitwise-identical to running it
         alone.  Returns (query_id, doc_id, score[, metadata])."""
         from .query.msearch import msearch_topk
-        from .tokenizer import analyze_text
 
-        plans = {
-            qid: self.plan(analyze_text(q, self.analyzer))
-            for qid, q in queries.items()
-        }
+        plans = {qid: self._prepare(q) for qid, q in queries.items()}
         hits = msearch_topk(
             self.spark, self.postings, self.doc_map, plans, k=k, mode=mode
         )
         if not with_meta:
             return hits
-        return (
-            F.broadcast(hits)
-            .join(
-                self.doc_map.select(
-                    "doc_id", "repo", "path", "commit", "lang"
-                ),
-                on="doc_id",
-            )
-            .orderBy("query_id", F.desc("score"), F.asc("doc_id"))
+        return self._join_meta(hits).orderBy(
+            "query_id", F.desc("score"), F.asc("doc_id")
         )
 
     def near_search(
@@ -766,7 +773,6 @@ class SearchEngine:
                 "(build_index(..., with_positions=True))"
             )
         from .query.phrase import near_topk
-        from .tokenizer import analyze_text
 
         query = analyze_text(query, self.analyzer)
         return near_topk(
@@ -799,20 +805,14 @@ class SearchEngine:
         non-standard analyzer, anchors and the snippet window live in the
         ANALYZED token stream (the same vocabulary the hits matched in).
         """
-        from .tokenizer import analyze_text
+        from .tokenizer import tokenize_expr
 
-        plan = self.plan(analyze_text(query, self.analyzer))
-        hits = self.search(query, k=k, mode=mode, with_meta=False, **kw)
-        with_key = F.broadcast(hits).join(
-            self.doc_map.select("doc_id", "repo", "path", "commit"),
-            on="doc_id",
-        )
-        joined = with_key.join(
+        # anchors are the terms of the plan the hits were scored with
+        plan, hits = self._search(query, k, mode, **kw)
+        joined = self._join_meta(hits, ("repo", "path", "commit")).join(
             corpus.select("repo", "path", "commit", "content"),
             on=["repo", "path", "commit"],
         )
-        from .tokenizer import tokenize_expr
-
         toks = tokenize_expr(F.col("content"), self.analyzer)
         # first occurrence of ANY query term: least() skips NULLs (absent
         # terms) in both Spark and DuckDB — order-independent anchor rule
@@ -841,20 +841,7 @@ class SearchEngine:
         with_meta: bool = False,
         expansions: dict[str, list[str]] | None = None,
     ) -> DataFrame:
-        from .tokenizer import analyze_text
-
-        plan = self.plan(
-            analyze_text(query, self.analyzer), expansions=expansions
-        )
-        hits = bm25_topk_naive(
-            self.spark,
-            self.postings,
-            self.doc_map.select("doc_id", "doclen"),
-            plan,
-            k=k,
-            mode=mode,
-        )
-        return self._materialize(hits, k) if with_meta else hits
+        return self._search_naive(query, k, mode, with_meta, expansions)
 
     def search_min_match(
         self,
@@ -869,18 +856,28 @@ class SearchEngine:
         — min_match=1 is OR, min_match=n is AND, anything between is the
         m-of-n middle ground AND/OR cannot express.  Same deterministic
         scoring contract as ``search`` (query/bm25.py for the plan)."""
-        from .tokenizer import analyze_text
-
-        plan = self.plan(
-            analyze_text(query, self.analyzer), expansions=expansions
+        return self._search_naive(
+            query, k, "or", with_meta, expansions, min_match=min_match
         )
+
+    def _search_naive(
+        self,
+        query: str,
+        k: int,
+        mode: str,
+        with_meta: bool,
+        expansions: dict[str, list[str]] | None,
+        min_match: int | None = None,
+    ) -> DataFrame:
+        """The Catalyst-only baseline plan (query/bm25.py) over the
+        prepared plan."""
         hits = bm25_topk_naive(
             self.spark,
             self.postings,
             self.doc_map.select("doc_id", "doclen"),
-            plan,
+            self._prepare(query, expansions=expansions),
             k=k,
-            mode="or",
+            mode=mode,
             min_match=min_match,
         )
         return self._materialize(hits, k) if with_meta else hits
@@ -933,7 +930,6 @@ class SearchEngine:
                 "(build_index(..., with_positions=True))"
             )
         from .query.phrase import phrase_topk
-        from .tokenizer import analyze_text
 
         phrase = analyze_text(phrase, self.analyzer)
         return phrase_topk(
@@ -1009,17 +1005,3 @@ class SearchEngine:
         """
         df = self.search(query, k=k, mode=mode, with_meta=False, **kw)
         return collect_with_timeout(self.spark, df, timeout_s)
-
-    def _materialize(self, hits: DataFrame, k: int) -> DataFrame:
-        """Late materialization: join metadata only for the <=k winners
-        (J4 analogue, DefaultStrucmotifRuntime.java:145-153); broadcast the
-        tiny hit side so the doc dictionary is never shuffled."""
-        return (
-            F.broadcast(hits)
-            .join(
-                self.doc_map.select("doc_id", "repo", "path", "commit", "lang"),
-                on="doc_id",
-            )
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )

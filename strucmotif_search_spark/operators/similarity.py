@@ -352,9 +352,19 @@ def ivf_assign(
     while the tree stays small (``n_cells x dim <= IVF_EXPR_MAX_TERMS`` —
     the seam every SQL oracle replays), the Arrow-batched numpy path past
     it.  ``method`` forces ``"expr"`` or ``"udf"`` explicitly (the
-    bit-equality test pins both paths against each other at n_cells=8)."""
+    bit-equality test pins both paths against each other at n_cells=8).
+
+    A zero-norm centroid has no cosine to anything and is rejected: the
+    two paths would otherwise disagree on it (NaN captures every vector on
+    ``expr``; it never wins on ``udf``)."""
     if method not in ("auto", "expr", "udf"):
         raise ValueError(f"unknown ivf assignment method: {method!r}")
+    zero = [
+        cid for cid, cv in centroids
+        if np.linalg.norm(np.asarray(cv, dtype=np.float64)) == 0.0
+    ]
+    if zero:
+        raise ValueError(f"zero-norm IVF centroids: {zero}")
     n_terms = sum(len(cv) for _, cv in centroids)
     if method == "expr" or (
         method == "auto" and n_terms <= IVF_EXPR_MAX_TERMS

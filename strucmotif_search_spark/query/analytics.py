@@ -134,24 +134,14 @@ def match_set(engine, query: str, mode: str = "or") -> DataFrame | None:
     Plan: pushed-down ``In(term_id)`` posting scan (S6), per-block doc-id
     decode, OR = distinct / AND = per-doc distinct-term count == n (A6);
     shuffles carry fixed-width (doc_id) rows of the match set only."""
-    from ..tokenizer import analyze_text
-    from .planner import plan_query
-
     if mode not in ("or", "and"):
         # this feeds delete_by_query: a mode typo must not silently widen
         # an irreversible delete from intersection to union
         raise ValueError(f"mode must be 'or' or 'and', got {mode!r}")
-    # same analysis as engine.search: a code-analyzer index must match
-    # 'getFoo' as get+foo here too, or delete_by_query/facet_counts would
-    # silently disagree with search on what matches
-    query = analyze_text(query, engine.analyzer)
-    plan = plan_query(
-        query,
-        engine.terms,
-        engine.stats,
-        stats_row=engine._stats_row,
-        vocab_lookup=engine._vocab_lookup,
-    )
+    # prepared like engine.search (same analyzer, same plan): otherwise
+    # delete_by_query/facet_counts could silently disagree with search on
+    # what matches
+    plan = engine._prepare(query)
     if not plan.term_ids or (mode == "and" and plan.n_absent):
         return None
     decoded = decode_postings(
@@ -246,19 +236,9 @@ def explain_contributions(
     a broadcast doc_map join; the contribution itself is a JVM expression.
     Nothing here scales with the corpus — only with ``len(doc_ids)`` and
     the query's posting blocks for those shards."""
-    from ..tokenizer import analyze_text
-    from .planner import plan_query
-
-    # analyze like engine.search so explained contributions sum to the
+    # prepared like engine.search so explained contributions sum to the
     # score the SEARCH actually produced, analyzer included
-    query = analyze_text(query, engine.analyzer)
-    plan = plan_query(
-        query,
-        engine.terms,
-        engine.stats,
-        stats_row=engine._stats_row,
-        vocab_lookup=engine._vocab_lookup,
-    )
+    plan = engine._prepare(query)
     empty = engine.spark.createDataFrame(
         [], "doc_id long, term string, tf long, contrib double"
     )

@@ -303,13 +303,8 @@ def bool_topk(
         score_keys=pos_ids,
         widen=widen,
     )
-    # volume-aware shard-prune default (engine.search convention), over the
-    # positive groups only — they alone decide candidacy and decode cost;
-    # explicit prune_shards overrides (tests pin both paths)
-    if prune_shards is None:
-        n_shards = engine.meta.get("n_shards") or 0
-        volume = sum(g.df for g in plan.groups if g.key in pos_ids)
-        prune_shards = n_shards > 64 and volume > 2_000_000
+    # prune_shards=None: bm25_topk_daat's volume rule over the positive
+    # groups; explicit values override (tests pin both paths)
     return bm25_topk_daat(
         engine.spark,
         engine.postings,

@@ -19,11 +19,10 @@ Reference analogues:
   member dfs (the public Lucene SynonymQuery convention — no extra
   distributed job for a union-count), one idf per group.
 
-The stats lookup goes through a driver-side vocabulary cache supplied by the
-engine (``vocab_lookup``) so repeated queries cost zero Spark jobs — the
-reference's precomputed informativeness table
-(ResiduePairOccurrence.java:230-463) plays the same role.  Without a cache
-it falls back to a tiny filtered scan of the terms table.
+The stats lookup goes through the engine's driver-side vocabulary cache
+(``vocab_lookup``, SearchEngine._vocab_lookup) so repeated queries cost zero
+Spark jobs — the reference's precomputed informativeness table
+(ResiduePairOccurrence.java:230-463) plays the same role.
 """
 
 from __future__ import annotations
@@ -31,9 +30,6 @@ from __future__ import annotations
 import math
 from collections.abc import Callable
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .. import BM25_B, BM25_K1
 from ..oracle import tokenize
@@ -135,14 +131,15 @@ def plan_analyzed(
 
 def plan_query(
     query: str,
-    terms_table: DataFrame,
-    stats_table: DataFrame,
-    stats_row=None,
+    stats_row,
+    vocab_lookup: VocabLookup,
     expansions: dict[str, list[str]] | None = None,
-    vocab_lookup: VocabLookup | None = None,
     should: str = "",
 ) -> QueryPlan:
-    """``should``: optional SHOULD-clause terms (Lucene BooleanQuery):
+    """``stats_row``: the generation's global stats row (n_docs, avgdl);
+    ``vocab_lookup``: the engine's vocabulary cache.
+
+    ``should``: optional SHOULD-clause terms (Lucene BooleanQuery):
     their groups are marked ``required=False`` — they contribute to scores
     but not to the conjunction requirement.  A term appearing in both
     ``query`` and ``should`` is MUST (the stricter occur wins, matching
@@ -150,8 +147,7 @@ def plan_query(
     ignored (it never increments ``n_absent``)."""
     distinct = sorted(set(tokenize(query)))
     should_distinct = sorted(set(tokenize(should)) - set(distinct))
-    st = stats_row if stats_row is not None else stats_table.first()
-    n_docs, avgdl = int(st["n_docs"]), float(st["avgdl"])
+    n_docs, avgdl = int(stats_row["n_docs"]), float(stats_row["avgdl"])
     if not distinct and not should_distinct:
         return QueryPlan([], [], [], [], 0, n_docs, avgdl)
     # group member sets: base term ∪ its expansions (expansion terms go
@@ -173,15 +169,7 @@ def plan_query(
         groups_members.append((members, req))
 
     lookup_terms = sorted({m for ms, _ in groups_members for m in ms})
-    if vocab_lookup is not None:
-        found = vocab_lookup(lookup_terms)
-    else:
-        rows = (
-            terms_table.where(F.col("term").isin(lookup_terms))
-            .select("term", "term_id", "df")
-            .collect()
-        )
-        found = {r["term"]: (int(r["term_id"]), int(r["df"])) for r in rows}
+    found = vocab_lookup(lookup_terms)
 
     groups: list[TermGroup] = []
     n_absent = 0

@@ -32,17 +32,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..codec import unpack_block
-
-_RESULT_SCHEMA = "doc_id long, score double"
+from .daat import (
+    _RESULT_SCHEMA,
+    _add_term_tf,
+    _dense_lengths,
+    _empty_pdf,
+    _score_by_shard,
+    _shard_topk,
+)
 
 QL_MU = 2000.0  # Dirichlet prior (Zhai & Lafferty 2001 recommended range)
-
-
-def _empty_pdf() -> pd.DataFrame:
-    return pd.DataFrame({"doc_id": [], "score": []}).astype(
-        {"doc_id": "int64", "score": "float64"}
-    )
 
 
 def ql_topk(
@@ -71,13 +70,8 @@ def ql_topk(
     def score_shard(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
         if len(left) == 0 or len(right) == 0:
             return _empty_pdf()
-        shard = int(left["shard"].iloc[0])
-        base = shard * docs_per_shard
-        norm_ids, norm_lens = unpack_block(
-            bytes(right["doc_gaps"].iloc[0]), bytes(right["doclens"].iloc[0])
-        )
-        dense_len = np.zeros(docs_per_shard, dtype=np.float64)
-        dense_len[norm_ids - base] = norm_lens
+        base = int(right["shard"].iloc[0]) * docs_per_shard
+        dense_len = _dense_lengths(right, base, docs_per_shard)
 
         by_tid = {int(t): g for t, g in left.groupby("term_id", sort=False)}
         denses: dict[int, np.ndarray] = {}
@@ -86,12 +80,8 @@ def ql_topk(
             g = by_tid.get(tid)
             if g is None:
                 continue
-            dense = np.zeros(docs_per_shard, dtype=np.float64)
-            for row in g.itertuples(index=False):
-                ids, tfs = unpack_block(bytes(row.doc_gaps), bytes(row.tfs))
-                dense[ids - base] += tfs
-            denses[tid] = dense
-            matched |= dense > 0
+            denses[tid] = _add_term_tf(None, g, base, docs_per_shard)
+            matched |= denses[tid] > 0
         # candidates: >=1 matched term AND eligible (doclen > 0 in norms —
         # the P1-P3 predicate mask rides the same norms sidecar as BM25)
         cand = np.flatnonzero(matched & (dense_len > 0))
@@ -103,28 +93,11 @@ def ql_topk(
         for tid in tids:  # ascending term_id: deterministic float64 order
             tf = denses[tid][cand] if tid in denses else 0.0
             score += np.log(tf + smooth[tid]) - log_denom
-        # per-shard top-k with boundary-tie retention (same protocol as the
-        # BM25 kernel: keep every doc tied at the k-th score, then exact
-        # (score desc, doc_id asc) order)
-        if cand.size > k:
-            part = np.argpartition(-score, k - 1)
-            thresh = score[part[k - 1]]
-            keep = np.flatnonzero(score >= thresh)
-            cand, score = cand[keep], score[keep]
-        order = np.lexsort((cand, -score))[:k]
-        return pd.DataFrame(
-            {
-                "doc_id": (cand[order] + base).astype("int64"),
-                "score": score[order],
-            }
-        )
+        # per-shard top-k with boundary-tie retention (the BM25 kernel's)
+        return _shard_topk(cand, score, k, base)
 
     blocks = postings.where(F.col("term_id").isin(tids)).select(
         "shard", "term_id", "doc_gaps", "tfs"
     )
-    scored = (
-        blocks.groupBy("shard")
-        .cogroup(norms.groupBy("shard"))
-        .applyInPandas(score_shard, schema=_RESULT_SCHEMA)
-    )
+    scored = _score_by_shard(blocks, norms, score_shard)
     return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)

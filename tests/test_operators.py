@@ -1413,6 +1413,21 @@ def test_ivf_assign_auto_dispatch(spark):
         similarity.ivf_assign(F.col("embedding"), small, "bogus")
 
 
+@pytest.mark.parametrize("method", ["expr", "udf"])
+def test_ivf_assign_rejects_zero_norm_centroid(spark, method):
+    """A zero-norm centroid has no cosine; both assignment paths must
+    refuse it up front instead of diverging (expr: NaN captures every
+    vector; udf: it never wins)."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    centroids = [(0, [0.0, 0.0]), (1, [1.0, 1.0])]
+    with pytest.raises(ValueError, match="zero-norm"):
+        df.select(
+            similarity.ivf_assign(F.col("embedding"), centroids, method)
+        ).collect()
+
+
 def test_lloyd_simultaneous_empty_cells_reseed_distinct():
     """Round-4 ADVICE (low): two cells going empty in the SAME Lloyd pass
     must be reseeded to DISTINCT points, chosen against the CURRENT (not

@@ -646,3 +646,36 @@ def test_naive_and_min_match_equal_search_results(engine):
 def test_phrase_longer_than_slot_capacity_raises(engine):
     with pytest.raises(ValueError, match="slot capacity"):
         engine.phrase_search(" ".join(["table"] * 65))
+
+
+# every BM25 entry point on the shared prepare → kernel → materialize path:
+# (name, call) with call(engine, query) -> DataFrame, or an int for
+# count_matches; multi-term entries get a token that matches no vocabulary
+_EDGE_ENTRIES = [
+    ("search_or", lambda e, q: e.search(q, mode="or")),
+    ("search_and", lambda e, q: e.search(q, mode="and")),
+    ("search_should", lambda e, q: e.search(q, should=q)),
+    ("prefix", lambda e, q: e.prefix_search(f"{q}*" if q else q)),
+    ("fuzzy", lambda e, q: e.fuzzy_search(f"{q}~" if q else q)),
+    ("regex", lambda e, q: e.regex_search(q)),
+    ("naive", lambda e, q: e.search_naive(q)),
+    ("min_match", lambda e, q: e.search_min_match(q, min_match=1)),
+    ("ql", lambda e, q: e.ql_search(q)),
+    ("msearch", lambda e, q: e.msearch({"q0": q})),
+    ("count", lambda e, q: e.count_matches(q)),
+]
+
+
+@pytest.mark.parametrize("query", ["zz_absent_token", ""])
+@pytest.mark.parametrize(
+    "entry", [c for _n, c in _EDGE_ENTRIES], ids=[n for n, _c in _EDGE_ENTRIES]
+)
+def test_absent_and_empty_queries_return_nothing(engine, entry, query):
+    """An all-absent query and an empty query answer zero rows, with the
+    (doc_id, score) result columns, on every entry point."""
+    got = entry(engine, query)
+    if isinstance(got, int):
+        assert got == 0
+        return
+    assert {"doc_id", "score"} <= set(got.columns)
+    assert got.count() == 0
